@@ -12,8 +12,11 @@ the FULL per-query timing map is written to $SPARK_GRAFT_BENCH_JSON
 (default BENCH_FULL_latest.json next to this script) for the committed
 artifact.
 
-Each query is executed to completion (count() over the result — forces
-the full plan without driver-side collect of payload rows).
+Each query is timed as count() over its result, with no driver-side
+collect of payload rows. count() does NOT force the full plan: Catalyst
+prunes every projection, window and outer join that cannot change the
+row count, so projection-heavy queries (regex, hash, window, vector
+columns) are under-measured (ROADMAP.md, Open item 1).
 
 Clean-run certification (round 8): a published per-query number must
 come from a run with hypervisor steal < 1% AND external-process CPU

@@ -18,6 +18,7 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 TABLES = (
     "region",
@@ -104,6 +105,68 @@ def release_pinned() -> None:
         _PINNED.pop().unpersist()
 
 
+# the session confs that steer parquet schema inference: the same files
+# infer a different schema when any of them changes
+_INFERENCE_CONFS = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.mergeSchema",
+)
+
+# real paths -> ((inference confs, file signature), inferred schema);
+# one entry per path tuple, replaced on any miss
+_SCHEMAS: dict[tuple[str, ...], tuple[tuple, StructType]] = {}
+
+
+def _file_signature(path: str) -> tuple:
+    """(relative name, size, mtime_ns) of every file under ``path``; a
+    single-file table is its own signature. Any rewrite, addition or
+    removal of a file changes it."""
+    if os.path.isfile(path):
+        st = os.stat(path)
+        return (("", st.st_size, st.st_mtime_ns),)
+    sig = []
+    for root, _dirs, files in os.walk(path):
+        for name in files:
+            full = os.path.join(root, name)
+            st = os.stat(full)
+            sig.append((os.path.relpath(full, path), st.st_size, st.st_mtime_ns))
+    return tuple(sorted(sig))
+
+
+def read_parquet(spark: SparkSession, *paths: str) -> DataFrame:
+    """The package's one batch parquet read: ``spark.read.parquet``
+    without the schema-inference job on a repeat read.
+
+    ``spark.read.parquet(path)`` launches a Spark job to read footers
+    and infer the schema on every call. This keeps Spark's own inferred
+    schema per path, stamped with the inference confs and the file
+    signature (``_file_signature``), and serves a repeat read as
+    ``spark.read.schema(cached).parquet(path)``, which launches no job.
+    The schema is the one Spark inferred, so plans and results do not
+    change; changed files or confs miss and infer again. Non-local URIs
+    cannot be listed cheaply and missing paths must raise Spark's own
+    error, so both go straight to ``spark.read.parquet``."""
+    if any("://" in p or not os.path.exists(p) for p in paths):
+        return spark.read.parquet(*paths)
+    key = tuple(os.path.realpath(p) for p in paths)
+    try:
+        stamp = (
+            tuple(spark.conf.get(c) for c in _INFERENCE_CONFS),
+            tuple(_file_signature(p) for p in key),
+        )
+    except OSError:  # a file vanished mid-listing: a writer is active
+        return spark.read.parquet(*paths)
+    hit = _SCHEMAS.get(key)
+    if hit is not None and hit[0] == stamp:
+        return spark.read.schema(hit[1]).parquet(*paths)
+    df = spark.read.parquet(*paths)
+    _SCHEMAS[key] = (stamp, df.schema)
+    return df
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Read one driver testdata table (TESTDATA.md).
 
@@ -120,13 +183,13 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         # our builder, and the flag must be live before the scan plans.
         # Idempotent, read at planning time — safe mid-session.
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        df = spark.read.parquet(path)
+        df = read_parquet(spark, path)
         if dict(df.dtypes).get("ts") in ("bigint", "long"):
             df = df.withColumn(
                 "ts", F.expr("cast(timestamp_micros(ts div 1000) as timestamp_ntz)")
             )
         return df
-    return spark.read.parquet(path)
+    return read_parquet(spark, path)
 
 
 def load_tables(
@@ -157,10 +220,10 @@ def ensure_table(spark: SparkSession, path: str, builder, name: str | None = Non
     materialize ``builder()`` there; always return a reader on it.
     Mirrors the reference's create-if-absent DDL lifecycle."""
     try:
-        df = spark.read.parquet(path)
+        df = read_parquet(spark, path)
     except Exception:
         builder().write.mode("overwrite").parquet(path)
-        df = spark.read.parquet(path)
+        df = read_parquet(spark, path)
     if name:
         df.createOrReplaceTempView(name)
     return df
@@ -422,7 +485,7 @@ def upsert_table(
 
     tmp = path.rstrip("/") + "_tmp"
     if _os.path.exists(path):
-        current = spark.read.parquet(path)
+        current = read_parquet(spark, path)
         merged = current.join(
             updates.select(*key_cols).distinct(), key_cols, "left_anti"
         ).unionByName(updates)
@@ -460,7 +523,7 @@ def compact_table(
                 total += _os.path.getsize(_os.path.join(root, f))
     n_files = max(1, -(-total // target_file_bytes))  # ceil
     tmp = path.rstrip("/") + "_compact_tmp"
-    spark.read.parquet(path).repartition(n_files).write.mode(
+    read_parquet(spark, path).repartition(n_files).write.mode(
         "overwrite"
     ).parquet(tmp)
     shutil.rmtree(path)
@@ -507,7 +570,7 @@ def merge_agg_state(
         aggs.append(col.alias(out))
     partial = batch.groupBy(*key_cols).agg(*aggs)
     if _os.path.exists(path):
-        state = spark.read.parquet(path)
+        state = read_parquet(spark, path)
         merge_aggs = [
             MERGEABLE_AGGS[agg if agg != "count" else "sum"](out).alias(out)
             for out, (agg, _src) in measures.items()
@@ -522,7 +585,7 @@ def merge_agg_state(
     if _os.path.exists(path):
         shutil.rmtree(path)
     _os.rename(tmp, path)
-    return spark.read.parquet(path)
+    return read_parquet(spark, path)
 
 
 def compact_partitioned_table(
@@ -596,7 +659,7 @@ def publish_audited(
 
     staging = path.rstrip("/") + "_staging"
     df.write.mode("overwrite").parquet(staging)
-    staged = spark.read.parquet(staging)
+    staged = read_parquet(spark, staging)
     results = {rule: int(fn(staged)) for rule, fn in constraints.items()}
     bad = {r: n for r, n in results.items() if n != 0}
     if bad:
@@ -647,7 +710,7 @@ def read_version(
     if version is None:
         with open(_os.path.join(table_dir, "_latest")) as f:
             version = int(_json.load(f)["version"])
-    return spark.read.parquet(_os.path.join(table_dir, f"v={version}"))
+    return read_parquet(spark, _os.path.join(table_dir, f"v={version}"))
 
 
 def expire_versions(table_dir: str, keep_last: int = 2) -> list[int]:

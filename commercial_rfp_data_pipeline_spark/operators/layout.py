@@ -26,6 +26,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from commercial_rfp_data_pipeline_spark.io import read_parquet
+
 # 16 bits per dimension after range normalization; 2 dims -> 32-bit
 # keys, 3 dims -> 48-bit: always inside int64
 ZBITS = 16
@@ -151,7 +153,7 @@ def optimize_table(
                 total += _os.path.getsize(_os.path.join(root, f))
     n_files = max(1, -(-total // target_file_bytes))  # ceil
     tmp = path.rstrip("/") + "_opt_tmp"
-    save_zordered(spark.read.parquet(path), tmp, zorder_cols, n_partitions=n_files)
+    save_zordered(read_parquet(spark, path), tmp, zorder_cols, n_partitions=n_files)
     shutil.rmtree(path)
     _os.rename(tmp, path)
     return n_files

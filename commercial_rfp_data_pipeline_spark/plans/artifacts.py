@@ -30,6 +30,7 @@ re-signatures, while the steady-state cost per query is zero.
 
 from __future__ import annotations
 
+import functools
 import hashlib
 import json
 import os
@@ -37,7 +38,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from commercial_rfp_data_pipeline_spark.io import load_table
+from commercial_rfp_data_pipeline_spark.io import load_table, read_parquet
 from commercial_rfp_data_pipeline_spark.plans.index_lifecycle import (
     _bm25_commit as _commit,
 )
@@ -151,10 +152,16 @@ def warehouse_root() -> str:
     repo = os.path.dirname(
         os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     )
-    root = os.path.join(repo, "spark-warehouse", "artifacts")
-    # registry queries are the first writers of durable artifacts: if
-    # the package lives on a read-only checkout, fall back to a
-    # per-user tmp warehouse instead of failing every consumer
+    return _writable_or_tmp(os.path.join(repo, "spark-warehouse", "artifacts"))
+
+
+@functools.cache
+def _writable_or_tmp(root: str) -> str:
+    """``root`` if this process can write there, else a per-user tmp
+    warehouse. Registry queries are the first writers of durable
+    artifacts: a package on a read-only checkout must not fail every
+    consumer. Probed once per root per process: every artifact access
+    asks for the root."""
     try:
         os.makedirs(root, exist_ok=True)
         probe = os.path.join(root, ".write_probe")
@@ -211,16 +218,16 @@ def ensure_chunk_embeddings(
 
         chunks = build_chunks(spark, sf_dir)
         chunks.write.mode("overwrite").parquet(chunks_path)
-        built = spark.read.parquet(chunks_path)
+        built = read_parquet(spark, chunks_path)
         build_embedding_parts(built).write.mode("overwrite").parquet(
             parts_path
         )
         build_embeddings(built).write.mode("overwrite").parquet(emb_path)
         _commit(root, {"tables": ["chunks", "emb_parts", "embeddings"]})
     return (
-        spark.read.parquet(chunks_path),
-        spark.read.parquet(parts_path),
-        spark.read.parquet(emb_path),
+        read_parquet(spark, chunks_path),
+        read_parquet(spark, parts_path),
+        read_parquet(spark, emb_path),
     )
 
 
@@ -273,7 +280,7 @@ def ensure_token_index(
             .distinct()
         )
         toks.write.mode("overwrite").parquet(toks_path)
-        built = spark.read.parquet(toks_path)
+        built = read_parquet(spark, toks_path)
         built.groupBy("tok").agg(
             F.count(F.lit(1)).alias("df")
         ).write.mode("overwrite").parquet(df_path)
@@ -296,9 +303,9 @@ def ensure_token_index(
             {"tables": ["toks", "df", "tokemb"], "k": k, "n_docs": n_docs},
         )
     return (
-        spark.read.parquet(toks_path),
-        spark.read.parquet(df_path),
-        spark.read.parquet(emb_path),
+        read_parquet(spark, toks_path),
+        read_parquet(spark, df_path),
+        read_parquet(spark, emb_path),
     )
 
 
@@ -446,7 +453,7 @@ def ensure_copurchase_graph(
     deg_path = os.path.join(root, "degrees")
     if _manifest(root) is None:
         _build_wedges().write.mode("overwrite").parquet(edges_path)
-        built = spark.read.parquet(edges_path)
+        built = read_parquet(spark, edges_path)
         (
             built.groupBy(F.col("src").alias("id"))
             .agg(F.count(F.lit(1)).alias("d"))
@@ -457,7 +464,7 @@ def ensure_copurchase_graph(
             root,
             {"tables": ["wedges", "degrees"], "n_edges": built.count()},
         )
-    return spark.read.parquet(edges_path), spark.read.parquet(deg_path)
+    return read_parquet(spark, edges_path), read_parquet(spark, deg_path)
 
 
 def append_to_copurchase_graph(
@@ -546,7 +553,7 @@ def append_to_copurchase_graph(
             )
         )
         merged.write.mode("overwrite").parquet(edges_path)
-        built = spark.read.parquet(edges_path)
+        built = read_parquet(spark, edges_path)
         (
             built.groupBy(F.col("src").alias("id"))
             .agg(F.count(F.lit(1)).alias("d"))
@@ -561,7 +568,7 @@ def append_to_copurchase_graph(
                 "appended_from": graph_warehouse(spark, base_sf_dir),
             },
         )
-    return spark.read.parquet(edges_path), spark.read.parquet(deg_path)
+    return read_parquet(spark, edges_path), read_parquet(spark, deg_path)
 
 
 def copurchase_n_edges(spark: SparkSession, sf_dir: str) -> int:
@@ -628,7 +635,7 @@ def ensure_lpa_labels(
     if _manifest(root) is None:
         _build().write.mode("overwrite").parquet(path)
         _commit(root, {"tables": ["labels"], "n_iters": n_iters})
-    return spark.read.parquet(path)
+    return read_parquet(spark, path)
 
 
 def ensure_purchase_bipartite(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -667,10 +674,10 @@ def ensure_purchase_bipartite(spark: SparkSession, sf_dir: str) -> DataFrame:
             root,
             {
                 "tables": ["edges"],
-                "n_edges": spark.read.parquet(path).count(),
+                "n_edges": read_parquet(spark, path).count(),
             },
         )
-    return spark.read.parquet(path)
+    return read_parquet(spark, path)
 
 
 def bipartite_n_edges(spark: SparkSession, sf_dir: str) -> int:
@@ -730,10 +737,10 @@ def append_to_purchase_bipartite(
             root,
             {
                 "tables": ["edges"],
-                "n_edges": spark.read.parquet(path).count(),
+                "n_edges": read_parquet(spark, path).count(),
             },
         )
-    return spark.read.parquet(path)
+    return read_parquet(spark, path)
 
 
 def customer_linkage_key(spark: SparkSession, sf_dir: str) -> str:
@@ -791,10 +798,10 @@ def ensure_fuzzy_customer_pairs(
             root,
             {
                 "tables": ["pairs"],
-                "n_pairs": spark.read.parquet(path).count(),
+                "n_pairs": read_parquet(spark, path).count(),
             },
         )
-    return spark.read.parquet(path)
+    return read_parquet(spark, path)
 
 
 def ensure_customer_entity_clusters(
@@ -840,10 +847,10 @@ def ensure_customer_entity_clusters(
             root,
             {
                 "tables": ["labels"],
-                "n_rows": spark.read.parquet(path).count(),
+                "n_rows": read_parquet(spark, path).count(),
             },
         )
-    return spark.read.parquet(path)
+    return read_parquet(spark, path)
 
 
 def ensure_audio_phash(
@@ -882,14 +889,14 @@ def ensure_audio_phash(
         docs = load_table(spark, sf_dir, "documents")
         hashes = perceptual_ahash_audio_envelope(synth_wav_corpus(docs))
         hashes.write.mode("overwrite").parquet(h_path)
-        built = spark.read.parquet(h_path)
+        built = read_parquet(spark, h_path)
         (
             ahash_neardup_clusters(built, max_hamming=AHASH_HAM_T)
             .write.mode("overwrite")
             .parquet(c_path)
         )
         _commit(root, {"tables": ["hashes", "clusters"]})
-    return spark.read.parquet(h_path), spark.read.parquet(c_path)
+    return read_parquet(spark, h_path), read_parquet(spark, c_path)
 
 
 def ensure_image_phash(
@@ -946,12 +953,12 @@ def ensure_image_phash(
         b = attach_binary(docs)
         perceptual_ahash(b).write.mode("overwrite").parquet(a_path)
         perceptual_dhash(b).write.mode("overwrite").parquet(d_path)
-        ah = spark.read.parquet(a_path)
-        dh = spark.read.parquet(d_path)
+        ah = read_parquet(spark, a_path)
+        dh = read_parquet(spark, d_path)
         phash_agreement_pairs(ah, dh, max_hamming=AHASH_HAM_T).write.mode(
             "overwrite"
         ).parquet(p_path)
-        pairs = spark.read.parquet(p_path)
+        pairs = read_parquet(spark, p_path)
         (
             dup_clusters(
                 docs.select("doc_id"),
@@ -962,10 +969,10 @@ def ensure_image_phash(
         )
         _commit(root, {"tables": ["ahash", "dhash", "pairs", "clusters"]})
     return (
-        spark.read.parquet(a_path),
-        spark.read.parquet(d_path),
-        spark.read.parquet(p_path),
-        spark.read.parquet(c_path),
+        read_parquet(spark, a_path),
+        read_parquet(spark, d_path),
+        read_parquet(spark, p_path),
+        read_parquet(spark, c_path),
     )
 
 
@@ -1005,7 +1012,7 @@ def ensure_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     if _manifest(root) is None:
         _build().write.mode("overwrite").parquet(path)
         _commit(root, {"tables": ["pairs"]})
-    return spark.read.parquet(path)
+    return read_parquet(spark, path)
 
 
 def embeddings_key(spark: SparkSession, sf_dir: str) -> str:
@@ -1082,7 +1089,7 @@ def ensure_ivf_models(
         ivf_centroids(
             v.select("vec_id", "embedding"), n_centroids=16
         ).write.mode("overwrite").parquet(cents_path)
-        cents = spark.read.parquet(cents_path)
+        cents = read_parquet(spark, cents_path)
         (
             ivf_assign(
                 v.select("vec_id", "embedding"), cents=cents
@@ -1095,7 +1102,7 @@ def ensure_ivf_models(
             .parquet(asg_path)
         )
         _commit(root, {"tables": ["cents", "asg"]})
-    return spark.read.parquet(cents_path), spark.read.parquet(asg_path)
+    return read_parquet(spark, cents_path), read_parquet(spark, asg_path)
 
 
 def ensure_pq_models(
@@ -1125,12 +1132,12 @@ def ensure_pq_models(
         pq_codebooks(v, dim=64).write.mode("overwrite").parquet(
             books_path
         )
-        books = spark.read.parquet(books_path)
+        books = read_parquet(spark, books_path)
         pq_encode(v, books, dim=64).write.mode("overwrite").parquet(
             codes_path
         )
         _commit(root, {"tables": ["books", "codes"]})
-    return spark.read.parquet(books_path), spark.read.parquet(codes_path)
+    return read_parquet(spark, books_path), read_parquet(spark, codes_path)
 
 
 def ensure_knn_graph8(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1159,7 +1166,7 @@ def ensure_knn_graph8(spark: SparkSession, sf_dir: str) -> DataFrame:
         v = _ann_vectors(spark, sf_dir).select("vec_id", "embedding")
         knn_graph(v, m=8).write.mode("overwrite").parquet(path)
         _commit(root, {"tables": ["graph"]})
-    return spark.read.parquet(path)
+    return read_parquet(spark, path)
 
 
 def ensure_nn_descent_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1187,7 +1194,7 @@ def ensure_nn_descent_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
             v, dim=64, m=8, rounds=2, n_tables=6
         ).write.mode("overwrite").parquet(path)
         _commit(root, {"tables": ["graph"]})
-    return spark.read.parquet(path)
+    return read_parquet(spark, path)
 
 
 def ensure_minhash_eval(
@@ -1233,7 +1240,7 @@ def ensure_minhash_eval(
             .parquet(truth_path)
         )
         _commit(root, {"tables": ["sigs", "truth02"]})
-    return spark.read.parquet(sigs_path), spark.read.parquet(truth_path)
+    return read_parquet(spark, sigs_path), read_parquet(spark, truth_path)
 
 
 def ensure_clean_pool(
@@ -1291,7 +1298,7 @@ def ensure_clean_pool(
             repetition_features(corpus).filter("keep").select("doc_id"),
             "doc_id",
         ).write.mode("overwrite").parquet(kept_path)
-        kept = spark.read.parquet(kept_path)
+        kept = read_parquet(spark, kept_path)
         contaminated = (
             contamination_overlap(kept, eval_docs, k=5)
             .filter("contaminated")
@@ -1301,7 +1308,7 @@ def ensure_clean_pool(
             "overwrite"
         ).parquet(clean_path)
         _commit(root, {"tables": ["kept", "clean"]})
-    return spark.read.parquet(kept_path), spark.read.parquet(clean_path)
+    return read_parquet(spark, kept_path), read_parquet(spark, clean_path)
 
 
 def dedup_index_for(spark: SparkSession, sf_dir: str) -> str:

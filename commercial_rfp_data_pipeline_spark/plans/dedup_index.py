@@ -45,6 +45,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from commercial_rfp_data_pipeline_spark.io import read_parquet
 from commercial_rfp_data_pipeline_spark.operators.dedup import (
     cluster_survivors,
     dup_clusters,
@@ -165,7 +166,8 @@ def dedup_tables(
     m = _manifest(root)
     if m is None:
         raise ValueError(f"dedup_tables: no index at {root}")
-    fp = spark.read.parquet(
+    fp = read_parquet(
+        spark,
         *[os.path.join(root, "fp", k) for k in m["batches"]]
     )
     paths = [
@@ -173,7 +175,7 @@ def dedup_tables(
         for b, key in m["buckets"].items()
     ]
     paths = [p for p in paths if os.path.isdir(p)]
-    clusters = spark.read.parquet(*paths)
+    clusters = read_parquet(spark, *paths)
     return fp, clusters
 
 
@@ -269,7 +271,7 @@ def purge_from_dedup_index(
     new_batches: list[str] = []
     fp_removed = 0
     for key in m["batches"]:
-        b = spark.read.parquet(os.path.join(root, "fp", key))
+        b = read_parquet(spark, os.path.join(root, "fp", key))
         hits = b.filter(is_purged)
         if hits.limit(1).count() == 0:
             new_batches.append(key)
@@ -319,7 +321,7 @@ def purge_from_dedup_index(
         ]
         cur_paths = [p for p in cur_paths if os.path.isdir(p)]
         untouched = (
-            spark.read.parquet(*cur_paths).filter(
+            read_parquet(spark, *cur_paths).filter(
                 ~F.col("cluster_id").isin(hit_clusters)
             )
             if cur_paths
@@ -445,7 +447,7 @@ def append_to_dedup_index(
         ]
         cur_paths = [p for p in cur_paths if os.path.isdir(p)]
         if cur_paths:
-            cur = spark.read.parquet(*cur_paths)
+            cur = read_parquet(spark, *cur_paths)
             if remap:
                 rm = spark.createDataFrame(
                     relabel_rows, "old_cid long, new_cid long"

@@ -22,7 +22,7 @@ import shutil
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from commercial_rfp_data_pipeline_spark.io import load_table
+from commercial_rfp_data_pipeline_spark.io import load_table, read_parquet
 from commercial_rfp_data_pipeline_spark.operators.chunking import chunk_text
 from commercial_rfp_data_pipeline_spark.operators.embedder import HashedBowEmbedder
 from commercial_rfp_data_pipeline_spark.operators.vector import knn_exact
@@ -70,7 +70,7 @@ def ensure_index(spark: SparkSession, sf_dir: str, warehouse: str) -> tuple[str,
         (emb_path, lambda: build_embeddings(build_chunks(spark, sf_dir))),
     ):
         try:
-            spark.read.parquet(path).limit(1).collect()
+            read_parquet(spark, path).limit(1).collect()
         except Exception:
             builder().write.mode("overwrite").parquet(path)
     return chunks_path, emb_path
@@ -106,14 +106,14 @@ def ensure_ivf_index(
     cents_path = os.path.join(warehouse, "ivf_centroids")
     cells_path = os.path.join(warehouse, "ivf_cells")
     try:
-        spark.read.parquet(cents_path).limit(1).collect()
-        spark.read.parquet(cells_path).limit(1).collect()
+        read_parquet(spark, cents_path).limit(1).collect()
+        read_parquet(spark, cells_path).limit(1).collect()
     except Exception:
-        emb = spark.read.parquet(emb_path)
+        emb = read_parquet(spark, emb_path)
         ivf_centroids(
             emb, n_centroids, id_col="chunk_id", vec_col="embedding"
         ).write.mode("overwrite").parquet(cents_path)
-        cents = spark.read.parquet(cents_path)
+        cents = read_parquet(spark, cents_path)
         ivf_assign(
             emb, n_centroids, id_col="chunk_id", vec_col="embedding", cents=cents
         ).write.mode("overwrite").partitionBy("cent_id").parquet(cells_path)
@@ -134,7 +134,7 @@ def ivf_search_index(
     partition filter is the right call) and rank exactly within."""
     from commercial_rfp_data_pipeline_spark.operators.vector import ivf_search
 
-    cents = spark.read.parquet(os.path.join(warehouse, "ivf_centroids"))
+    cents = read_parquet(spark, os.path.join(warehouse, "ivf_centroids"))
     qdf = spark.createDataFrame(
         [(f"q{i}", t) for i, t in enumerate(query_texts)], "q_id string, qtext string"
     )
@@ -165,7 +165,7 @@ def ivf_search_index(
         .collect()
     ]
     cells = (
-        spark.read.parquet(os.path.join(warehouse, "ivf_cells"))
+        read_parquet(spark, os.path.join(warehouse, "ivf_cells"))
         .filter(F.col("cent_id").isin(probe_ids))
         .select("chunk_id", "embedding", "cent_id", "_n")
     )
@@ -200,7 +200,7 @@ def append_to_ivf_index(
     from commercial_rfp_data_pipeline_spark.operators.vector import ivf_assign
     from commercial_rfp_data_pipeline_spark.operators.chunking import chunk_text
 
-    cents = spark.read.parquet(os.path.join(warehouse, "ivf_centroids"))
+    cents = read_parquet(spark, os.path.join(warehouse, "ivf_centroids"))
     chunks = chunk_text(new_docs, size=CHUNK_SIZE, overlap=CHUNK_OVERLAP)
     emb = build_embeddings(chunks)
     assigned = ivf_assign(
@@ -234,7 +234,7 @@ def append_to_ivf_index_reconciled(
     from commercial_rfp_data_pipeline_spark.operators.vector import ivf_assign
 
     cells_path = os.path.join(warehouse, "ivf_cells")
-    cents = spark.read.parquet(os.path.join(warehouse, "ivf_centroids"))
+    cents = read_parquet(spark, os.path.join(warehouse, "ivf_centroids"))
     chunks = chunk_text(new_docs, size=CHUNK_SIZE, overlap=CHUNK_OVERLAP)
     emb = build_embeddings(chunks)
     assigned = ivf_assign(
@@ -244,7 +244,7 @@ def append_to_ivf_index_reconciled(
         r.cent_id for r in assigned.select("cent_id").distinct().collect()
     ]
     existing = (
-        spark.read.parquet(cells_path)
+        read_parquet(spark, cells_path)
         .filter(F.col("cent_id").isin(touched))
         .select("chunk_id")
     )
@@ -263,7 +263,7 @@ def search(
     """Query-time vectorizer + exhaustive KNN (indexer:119-136): embed
     the query strings with the same embedder, top-k over the stored
     embeddings table."""
-    emb = spark.read.parquet(os.path.join(warehouse, "embeddings"))
+    emb = read_parquet(spark, os.path.join(warehouse, "embeddings"))
     qdf = spark.createDataFrame(
         [(f"q{i}", t) for i, t in enumerate(query_texts)], "q_id string, qtext string"
     )
@@ -294,7 +294,7 @@ def ensure_graph_index(
 
     graph_path = os.path.join(warehouse, "knn_graph")
     try:
-        spark.read.parquet(graph_path).limit(1).collect()
+        read_parquet(spark, graph_path).limit(1).collect()
     except Exception:
         emb = load_table(spark, sf_dir, "embeddings").select(
             "vec_id",
@@ -349,7 +349,7 @@ def graph_search_index(
         frontier = [r.vec_id for r in beam.select("vec_id").distinct().collect()]
         buckets = _xxhash_buckets(spark, frontier, n_src_buckets)
         edges = (
-            spark.read.parquet(graph_path)
+            read_parquet(spark, graph_path)
             .filter(F.col("src_bucket").isin(buckets))
             .filter(F.col("src_id").isin(frontier))
             .select("src_id", "nbr_id")
@@ -512,7 +512,7 @@ def append_to_bm25_index(
     # stage (overwrite clears partials from a previously crashed attempt)
     tf.write.mode("overwrite").parquet(os.path.join(root, "tf", key))
     dl.write.mode("overwrite").parquet(os.path.join(root, "dl", key))
-    df_old = spark.read.parquet(os.path.join(root, "df", manifest["df"]))
+    df_old = read_parquet(spark, os.path.join(root, "df", manifest["df"]))
     (
         df_old.select("tok", F.col("df").alias("df_a"))
         .join(df_new.select("tok", F.col("df").alias("df_b")), "tok", "full_outer")
@@ -521,7 +521,8 @@ def append_to_bm25_index(
             (F.coalesce("df_a", F.lit(0)) + F.coalesce("df_b", F.lit(0))).alias("df"),
         )
     ).write.mode("overwrite").parquet(os.path.join(root, "df", key))
-    stats_old = spark.read.parquet(
+    stats_old = read_parquet(
+        spark,
         os.path.join(root, "stats", manifest["stats"])
     ).collect()[0]
     spark.createDataFrame(
@@ -541,14 +542,16 @@ def bm25_tables(spark: SparkSession, warehouse: str):
     manifest = _bm25_manifest(root)
     if manifest is None:
         raise ValueError(f"bm25_tables: no index at {root}")
-    tf = spark.read.parquet(
+    tf = read_parquet(
+        spark,
         *[os.path.join(root, "tf", k) for k in manifest["batches"]]
     )
-    dl = spark.read.parquet(
+    dl = read_parquet(
+        spark,
         *[os.path.join(root, "dl", k) for k in manifest["batches"]]
     )
-    df = spark.read.parquet(os.path.join(root, "df", manifest["df"]))
-    stats = spark.read.parquet(os.path.join(root, "stats", manifest["stats"]))
+    df = read_parquet(spark, os.path.join(root, "df", manifest["df"]))
+    stats = read_parquet(spark, os.path.join(root, "stats", manifest["stats"]))
     return tf, dl, df, stats
 
 
@@ -722,8 +725,8 @@ def ivf_cell_drift(spark: SparkSession, warehouse: str) -> DataFrame:
     cheap health check to run after every append batch."""
     from commercial_rfp_data_pipeline_spark.operators.vector import _dot, _norm
 
-    cents = spark.read.parquet(os.path.join(warehouse, "ivf_centroids"))
-    cells = spark.read.parquet(os.path.join(warehouse, "ivf_cells"))
+    cents = read_parquet(spark, os.path.join(warehouse, "ivf_centroids"))
+    cells = read_parquet(spark, os.path.join(warehouse, "ivf_cells"))
     comp = cells.select("cent_id", F.posexplode("embedding").alias("idx", "x"))
     means = (
         comp.groupBy("cent_id", "idx")
@@ -779,14 +782,14 @@ def ivf_maintain(
     if not drifted_ids:
         return {"n_drifted": 0, "n_reassigned": 0, "drifted_ids": []}
 
-    cents_schema = spark.read.parquet(cents_path).schema
+    cents_schema = read_parquet(spark, cents_path).schema
     cid_type = next(
         f.dataType.simpleString()
         for f in cents_schema
         if f.name == "cent_id"
     )
-    cents_rows = spark.read.parquet(cents_path).collect()
-    members = spark.read.parquet(cells_path).filter(
+    cents_rows = read_parquet(spark, cents_path).collect()
+    members = read_parquet(spark, cells_path).filter(
         F.col("cent_id").isin(drifted_ids)
     ).select("chunk_id", "embedding", "_n")
     # cent_id inherits the corpus id type (long for the embeddings
@@ -940,8 +943,8 @@ def purge_from_indexes(
     removed_dl = None
     n_chunks_removed = 0
     for key in manifest["batches"]:
-        tf_b = spark.read.parquet(os.path.join(root, "tf", key))
-        dl_b = spark.read.parquet(os.path.join(root, "dl", key))
+        tf_b = read_parquet(spark, os.path.join(root, "tf", key))
+        dl_b = read_parquet(spark, os.path.join(root, "dl", key))
         hit_dl = dl_b.filter(is_purged)
         if hit_dl.limit(1).count() == 0:
             new_batches.append(key)
@@ -969,7 +972,8 @@ def purge_from_indexes(
         ).collect()[0]
         bm25_removed = rem_stats["n"]
         df_key = f"{manifest['df']}-purge{purge_sig}"
-        df_old = spark.read.parquet(
+        df_old = read_parquet(
+            spark,
             os.path.join(root, "df", manifest["df"])
         )
         df_dec = removed_tf.groupBy("tok").agg(
@@ -984,7 +988,8 @@ def purge_from_indexes(
             .filter(F.col("df") > 0)
         ).write.mode("overwrite").parquet(os.path.join(root, "df", df_key))
         stats_key = f"{manifest['stats']}-purge{purge_sig}"
-        stats_old = spark.read.parquet(
+        stats_old = read_parquet(
+            spark,
             os.path.join(root, "stats", manifest["stats"])
         ).collect()[0]
         spark.createDataFrame(
@@ -1003,7 +1008,7 @@ def purge_from_indexes(
 
     # ---- IVF ----
     cells_path = os.path.join(warehouse, "ivf_cells")
-    cells = spark.read.parquet(cells_path)
+    cells = read_parquet(spark, cells_path)
     hit_cells = [
         r.cent_id
         for r in cells.filter(is_purged).select("cent_id").distinct().collect()
@@ -1038,7 +1043,7 @@ def purge_from_indexes(
                 if os.path.isdir(part_dir):
                     shutil.rmtree(part_dir)
         leftover = (
-            spark.read.parquet(cells_path)
+            read_parquet(spark, cells_path)
             .filter(F.col("cent_id").isin(hit_cells) & is_purged)
             .limit(1)
             .count()
@@ -1106,7 +1111,7 @@ def purge_from_semantic_cache(
     new_batches: list[str] = []
     removed = 0
     for key in manifest["batches"]:
-        e = spark.read.parquet(os.path.join(root, "entries", key))
+        e = read_parquet(spark, os.path.join(root, "entries", key))
         hits = e.filter(F.col("result_id").isin(ids))
         if hits.limit(1).count() == 0:
             new_batches.append(key)
@@ -1157,7 +1162,7 @@ def purge_from_graph_index(
 
     graph_path = os.path.join(warehouse, "knn_graph")
     ids = sorted({int(v) for v in vec_ids})
-    g = spark.read.parquet(graph_path)
+    g = read_parquet(spark, graph_path)
     pbuckets = _xxhash_buckets(spark, ids, n_src_buckets)
     purged_adj = (
         g.filter(
@@ -1285,7 +1290,7 @@ def purge_from_graph_index(
             if os.path.isdir(d):
                 shutil.rmtree(d)
     leftover = (
-        spark.read.parquet(graph_path)
+        read_parquet(spark, graph_path)
         .filter(F.col("src_id").isin(ids) | F.col("nbr_id").isin(ids))
         .limit(1)
         .count()

@@ -48,10 +48,12 @@ def get_spark(
 ) -> SparkSession:
     """Build (or fetch) the engine SparkSession.
 
-    Defaults: ``local[$SPARK_GRAFT_CPUS]`` (32), shuffle partitions
-    matched to cores (not Spark's default 200 — wrong for local and
-    tiny data; at real cluster scale callers raise it to ~2-3x total
-    cores), AQE + skew-join handling on, UTC session timezone so
+    Defaults: ``local[$SPARK_GRAFT_CPUS]`` (32), a fixed
+    ``DEFAULT_SHUFFLE_PARTITIONS`` (32) shuffle partitions whatever the
+    core count (``$SPARK_SHUFFLE_PARTITIONS`` or ``shuffle_partitions``
+    override it; Spark's default 200 is wrong for local and tiny data,
+    and at real cluster scale callers raise it to ~2-3x total cores),
+    AQE + skew-join handling on, UTC session timezone so
     timestamp comparisons against the DuckDB oracle (UTC-naive) are
     stable, ANSI off for permissive multi-format parsing semantics
     (the reference's pandas `errors='coerce'` model; SURVEY.md §4.3).

@@ -36,6 +36,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
+from commercial_rfp_data_pipeline_spark.io import read_parquet
+
 DOCS_SCHEMA = "doc_id long, text string"
 
 
@@ -211,7 +213,7 @@ def curated_ingest_sink(
         )
         if _prior_store_batches(store_path, batch_id):
             store = (
-                spark.read.parquet(store_path)
+                read_parquet(spark, store_path)
                 .filter(F.col("batch_id") != batch_id)
                 .select("fp")
             )
@@ -329,7 +331,7 @@ def neardup_ingest_sink(
         )
         if _prior_store_batches(store_path, batch_id):
             store_sh = (
-                spark.read.parquet(store_path)
+                read_parquet(spark, store_path)
                 .filter(F.col("batch_id") != batch_id)
                 .select("doc_id", "simhash")
             )

@@ -27,6 +27,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from commercial_rfp_data_pipeline_spark.io import read_parquet
 from commercial_rfp_data_pipeline_spark.operators.experiment import (
     daily_arm_moments,
     monitor_readout_from_daily,
@@ -101,7 +102,7 @@ def monitor_readout(spark: SparkSession, store: str) -> DataFrame:
     """Current z / boundary table from the landed partials: merge the
     per-batch moment partials (exact DECIMAL sums of sums) into the
     daily table, then apply the shared batch kernel."""
-    parts = spark.read.parquet(_partials_dir(store))
+    parts = read_parquet(spark, _partials_dir(store))
     daily = parts.groupBy("day", "arm").agg(
         F.sum("n").alias("n"),
         F.sum("s").alias("s"),

@@ -11,7 +11,7 @@ user. For a parquet sink the standard recipe, used here: write each
 micro-batch to its own ``batch_id=N`` partition directory with
 overwrite mode, so a replayed batch OVERWRITES its own directory with
 identical rows instead of appending duplicates. Readers see the whole
-output as one partitioned table (``spark.read.parquet(out_path)``
+output as one partitioned table (``read_parquet(spark, out_path)``
 discovers ``batch_id`` as a partition column).
 
 Scale notes: each micro-batch is one atomic directory rename away from
@@ -29,6 +29,8 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
+
+from commercial_rfp_data_pipeline_spark.io import read_parquet
 
 
 def exactly_once_parquet_sink(
@@ -114,7 +116,7 @@ def dedup_ingest_sink(
         )
         try:
             store = (
-                spark.read.parquet(store_path)
+                read_parquet(spark, store_path)
                 .filter(F.col("batch_id") != batch_id)
                 .select("fp")
             )
@@ -219,7 +221,7 @@ def session_topk(spark, store_path: str, k: int = 3) -> DataFrame:
     """Global top-k busiest CLOSED sessions in the store, deterministic
     tiebreak (n_events DESC, user_id, session_start). TakeOrdered shape
     — no full sort, no shuffle beyond the per-partition heaps."""
-    live = spark.read.parquet(store_path).select(
+    live = read_parquet(spark, store_path).select(
         "session_start", "session_end", "user_id", "n_events"
     )
     return (
@@ -467,7 +469,7 @@ def session_update_topk_latest(spark, root_path: str) -> DataFrame:
             for d in os.listdir(out_dir)
             if d.startswith("batch_id=")
         )
-    return spark.read.parquet(os.path.join(out_dir, f"batch_id={latest}"))
+    return read_parquet(spark, os.path.join(out_dir, f"batch_id={latest}"))
 
 
 def cdc_upsert_sink(
@@ -520,7 +522,7 @@ def read_cdc_store(
     the retained change history."""
     from pyspark.sql import Window as W
 
-    s = spark.read.parquet(store_path)
+    s = read_parquet(spark, store_path)
     if as_of_batch is not None:
         s = s.filter(F.col("batch_id") <= as_of_batch)
     order = [F.col("batch_id").desc()]

@@ -20,6 +20,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from commercial_rfp_data_pipeline_spark.io import read_parquet
+
 
 def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Replayable finite stream over the events parquet (one file =
@@ -32,7 +34,7 @@ def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     session timezone is UTC, making the NTZ→TZ cast value-preserving and
     keeping stream results aligned with the batch mirror."""
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
+    schema = read_parquet(spark, f"{sf_dir}/events.parquet").schema
     stream = (
         spark.readStream.schema(schema)
         .option("pathGlobFilter", "events.parquet")  # file sources need a dir

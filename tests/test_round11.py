@@ -24,6 +24,24 @@ def test_artifacts_mode_validation(monkeypatch):
         A.artifacts_mode()
 
 
+def test_default_warehouse_root_probed_once(monkeypatch):
+    """Without SPARK_GRAFT_WAREHOUSE, every artifact access asks for the
+    root; the write probe runs on the first ask only."""
+    from commercial_rfp_data_pipeline_spark.plans import artifacts as A
+
+    monkeypatch.delenv("SPARK_GRAFT_WAREHOUSE", raising=False)
+    monkeypatch.setenv("SPARK_GRAFT_ARTIFACTS", "warm")
+    A._writable_or_tmp.cache_clear()
+    removed = []
+    real_remove = os.remove
+    monkeypatch.setattr(
+        os, "remove", lambda p: (removed.append(p), real_remove(p))
+    )
+    roots = {A.warehouse_root() for _ in range(3)}
+    assert len(roots) == 1
+    assert [os.path.basename(p) for p in removed] == [".write_probe"]
+
+
 def test_artifacts_off_matches_warm_and_never_writes(
     spark, sf_dir, tmp_path, monkeypatch
 ):
