@@ -1,17 +1,32 @@
 #!/usr/bin/env python
-"""Dump formatted physical plans for the headline queries into
-PLANS.md — the plan-quality evidence (pushdown, broadcast, exchange
-counts) as a committed artifact rather than a claim. Re-run after any
-operator change: python scripts/dump_plans.py
+"""Dump formatted physical plans (`explain("formatted")`).
+
+Two modes:
+
+- no arguments: the headline queries (``SHOW``) into PLANS.md — the
+  plan-quality evidence (pushdown, broadcast, exchange counts) as a
+  committed artifact rather than a claim. Re-run after any operator
+  change: ``python scripts/dump_plans.py``
+- ``--outdir DIR --suffix SUFFIX QUERY...``: one file per query,
+  ``DIR/<query>_<SUFFIX>.txt``, for before/after plan evidence. Run
+  once at the base revision (``--suffix before``) and once at the
+  change (``--suffix after``); queries not registered at a revision
+  are skipped, and env toggles are honored, so forced-distributed or
+  artifacts-off dumps need only a distinct suffix. E.g.
+  ``python scripts/dump_plans.py --outdir plans/r11 --suffix after
+  pagerank_copurchase ivf_coarse_assignment``. Input:
+  ``$SPARK_GRAFT_SF_DIR`` (default /root/testdata/sf0.001).
 """
 
 from __future__ import annotations
 
+import argparse
 import os
 import re
 import sys
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 from commercial_rfp_data_pipeline_spark.io import release_pinned
 from commercial_rfp_data_pipeline_spark.registry import all_queries
@@ -60,9 +75,17 @@ SHOW = [
 ]
 
 
-def main() -> None:
-    spark = get_spark(app_name="plans")
-    queries = all_queries()
+def _plan(spark, df) -> str:
+    plan = df._jdf.queryExecution().explainString(
+        spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
+            "formatted"
+        )
+    )
+    # strip volatile ids (paths are stable; codegen ids are not)
+    return re.sub(r"\[codegen id : \d+\]", "[codegen]", plan)
+
+
+def dump_plans_md(spark, queries) -> None:
     sf = "/root/testdata/sf0.001"
     out = [
         "# PLANS — formatted physical plans of headline queries",
@@ -75,20 +98,50 @@ def main() -> None:
         "",
     ]
     for name, note in SHOW:
-        df = queries[name](spark, sf)
-        plan = df._jdf.queryExecution().explainString(
-            spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
-                "formatted"
-            )
-        )
-        # strip volatile ids (paths are stable; codegen ids are not)
-        plan = re.sub(r"\[codegen id : \d+\]", "[codegen]", plan)
+        plan = _plan(spark, queries[name](spark, sf))
         out.append(f"## {name}\n\n*{note}*\n\n```\n{plan.strip()}\n```\n")
         release_pinned()
-    with open(os.path.join(os.path.dirname(os.path.dirname(
-            os.path.abspath(__file__))), "PLANS.md"), "w") as f:
+    with open(os.path.join(REPO, "PLANS.md"), "w") as f:
         f.write("\n".join(out))
     print(f"wrote PLANS.md with {len(SHOW)} plans")
+
+
+def dump_plan_files(spark, queries, names, outdir, suffix) -> None:
+    os.makedirs(outdir, exist_ok=True)
+    sf = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
+    for name in names:
+        if name not in queries:
+            print(f"skip {name}: not registered at this revision")
+            continue
+        try:
+            plan = _plan(spark, queries[name](spark, sf))
+        except Exception as e:  # noqa: BLE001 — record, keep dumping
+            plan = f"ERROR building plan: {e}"
+        # strip the content-hash component of artifact paths so before/
+        # after diffs show structure, not corpus-signature churn
+        plan = re.sub(r"(artifact[s]?/[a-z0-9_]+-)[0-9a-f]{8,}", r"\1<key>", plan)
+        path = os.path.join(outdir, f"{name}_{suffix}.txt")
+        with open(path, "w") as f:
+            f.write(plan.strip() + "\n")
+        print(f"wrote {path}")
+        release_pinned()
+        spark.catalog.clearCache()
+
+
+def main() -> None:
+    ap = argparse.ArgumentParser(description=__doc__.splitlines()[0])
+    ap.add_argument("--outdir", help="write one file per query here")
+    ap.add_argument("--suffix", default="after")
+    ap.add_argument("queries", nargs="*")
+    args = ap.parse_args()
+    if bool(args.outdir) != bool(args.queries):
+        ap.error("--outdir and a query list go together")
+    spark = get_spark(app_name="plans")
+    queries = all_queries()
+    if args.outdir:
+        dump_plan_files(spark, queries, args.queries, args.outdir, args.suffix)
+    else:
+        dump_plans_md(spark, queries)
 
 
 if __name__ == "__main__":

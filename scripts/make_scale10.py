@@ -33,7 +33,7 @@ Generation is deterministic (md5-seeded) and distribution-preserving:
   (node and edge count x10; replicating with shared partkeys would
   only grow edge WEIGHTS and fake the graph alpha).
 
-Output: /root/repo/scale10/ (gitignored — regenerable by this script;
+Output: <repo>/scale10/ (gitignored — regenerable by this script;
 testdata itself is never touched).
 
 Usage: python scripts/make_scale10.py [out_dir]
@@ -44,7 +44,8 @@ from __future__ import annotations
 import os
 import sys
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 from pyspark.sql import functions as F
 
@@ -55,7 +56,7 @@ REPS = 9  # plus the originals = 10x
 
 
 def main() -> None:
-    out = sys.argv[1] if len(sys.argv) > 1 else "/root/repo/scale10"
+    out = sys.argv[1] if len(sys.argv) > 1 else os.path.join(REPO, "scale10")
     spark = get_spark(app_name="make_scale10")
     spark.sparkContext.setLogLevel("ERROR")
 

@@ -23,7 +23,8 @@ import os
 import sys
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 from commercial_rfp_data_pipeline_spark.io import release_pinned
 from commercial_rfp_data_pipeline_spark.registry import all_queries
@@ -32,7 +33,7 @@ from commercial_rfp_data_pipeline_spark.session import get_spark
 ROOT = "/root/testdata"
 # round 8: the fourth decade is the synthesized 10x-sf0.1 dataset
 # (scripts/make_scale10.py) — included automatically when generated
-SCALE10 = os.environ.get("SPARK_GRAFT_SCALE10", "/root/repo/scale10")
+SCALE10 = os.environ.get("SPARK_GRAFT_SCALE10", os.path.join(REPO, "scale10"))
 SFS = ("sf0.001", "sf0.01", "sf0.1")
 
 

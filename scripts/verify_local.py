@@ -33,12 +33,13 @@ from __future__ import annotations
 import argparse
 import decimal
 import math
+import os
 import re
 import sys
 import time
 import traceback
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import duckdb
 

@@ -3,11 +3,12 @@
 from __future__ import annotations
 
 import importlib
+import os
 import sys
 
 
 def _entry_mod():
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
     import __spark_entry__ as m
 
     return importlib.reload(m)

@@ -9,16 +9,18 @@ test session runs local[4] where any task failure is fatal)."""
 
 from __future__ import annotations
 
+import os
 import subprocess
 import sys
 import textwrap
 
 SF_SMOKE = "/root/testdata/sf0.001"
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 _PROBE = textwrap.dedent(
     """
     import os, sys, tempfile
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, {root!r})
     from pyspark.sql import SparkSession, functions as F
     spark = (SparkSession.builder.master("local[4, 2]")
              .config("spark.sql.shuffle.partitions", "4")
@@ -77,7 +79,7 @@ def test_operators_deterministic_under_task_retry():
     results when a task fails once and is retried — the property that
     makes them safe under speculative execution at cluster scale."""
     r = subprocess.run(
-        [sys.executable, "-c", _PROBE.format(sf=SF_SMOKE)],
+        [sys.executable, "-c", _PROBE.format(sf=SF_SMOKE, root=REPO)],
         capture_output=True,
         text=True,
         timeout=540,

@@ -8,6 +8,7 @@ from __future__ import annotations
 import os
 
 import pytest
+from pyspark.sql import functions as F
 
 from commercial_rfp_data_pipeline_spark.io import load_table
 
@@ -46,10 +47,20 @@ def test_artifacts_off_matches_warm_and_never_writes(
     spark, sf_dir, tmp_path, monkeypatch
 ):
     """off mode must derive the identical tables inline without
-    creating anything under the warehouse root."""
+    creating anything under the warehouse root — an append included:
+    it returns the merged tables inline, equal to the warm build."""
     from commercial_rfp_data_pipeline_spark.plans import artifacts as A
 
     wh = tmp_path / "art"
+    # previous snapshot = all but a small whole-order delta
+    li = load_table(spark, sf_dir, "lineitem").select(
+        "l_orderkey", "l_partkey"
+    )
+    base_dir = tmp_path / "base_sf"
+    li.filter(F.col("l_orderkey") % 16 != 1).write.parquet(
+        str(base_dir / "lineitem.parquet")
+    )
+    delta = li.filter(F.col("l_orderkey") % 16 == 1)
     monkeypatch.setenv("SPARK_GRAFT_WAREHOUSE", str(wh))
 
     monkeypatch.setenv("SPARK_GRAFT_ARTIFACTS", "warm")
@@ -66,6 +77,11 @@ def test_artifacts_off_matches_warm_and_never_writes(
         r.doc_id for r in A.ensure_clean_pool(spark, sf_dir)[1].collect()
     }
     warm_ndocs = A.token_index_n_docs(spark, sf_dir, k=3)
+    warm_degrees = {
+        (r.id, r.d)
+        for r in A.ensure_copurchase_graph(spark, sf_dir)[1].collect()
+    }
+    warm_bip_n = A.bipartite_n_edges(spark, sf_dir)
 
     monkeypatch.setenv("SPARK_GRAFT_ARTIFACTS", "off")
     import shutil
@@ -84,12 +100,21 @@ def test_artifacts_off_matches_warm_and_never_writes(
         r.doc_id for r in A.ensure_clean_pool(spark, sf_dir)[1].collect()
     }
     off_ndocs = A.token_index_n_docs(spark, sf_dir, k=3)
+    off_bip_n = A.bipartite_n_edges(spark, sf_dir)
+    app_w, app_d = A.append_to_copurchase_graph(
+        spark, str(base_dir), delta, sf_dir
+    )
+    off_app_wedges = {(r.src, r.dst, r.w, r.w_dist) for r in app_w.collect()}
+    off_app_degrees = {(r.id, r.d) for r in app_d.collect()}
 
     assert off_pairs == warm_pairs
     assert off_wedges == warm_wedges
     assert off_n_edges == warm_n_edges
     assert off_clean == warm_clean
     assert off_ndocs == warm_ndocs
+    assert off_bip_n == warm_bip_n > 0
+    assert off_app_wedges == warm_wedges
+    assert off_app_degrees == warm_degrees
     # no read, no write: the warehouse root was removed before the off
     # pass and must not have been recreated by it
     assert not wh.exists()
