@@ -187,12 +187,8 @@ def pagerank(
     # (s + 0.0*t_v == s for the non-negative contributions here).
     # The personalized co-purchase query hits this: its isolated parts
     # have t_v = 0 and, on a symmetrized edge list, no in-edges.
-    import os as _os
-
     dangling_zero = False
-    if consts is None and _os.environ.get(
-        "SPARK_GRAFT_PR_DANGLING_FAST", "1"
-    ) not in ("0", "false"):
+    if consts is None:
         tpc = F.col("_tp") if teleport_col is not None else F.lit(1.0 / n)
         d_nodes = base.filter(F.col("outdeg") == 0)
         dangling_zero = d_nodes.filter(tpc != 0.0).limit(1).count() == 0

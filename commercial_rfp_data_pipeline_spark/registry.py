@@ -60,9 +60,7 @@ def _register_all() -> None:
         linkage_q,
         stats_q,
         layout_q,
-        round8_q,
         eval_q,
-        round9_q,
     )
 
 

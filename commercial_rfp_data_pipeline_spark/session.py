@@ -15,29 +15,12 @@ from pyspark.sql import SparkSession
 DEFAULT_SHUFFLE_PARTITIONS = 32
 
 
-def _ensure_worker_protobuf_path() -> None:
-    """Prepend the vendored mini-protobuf to PYTHONPATH when no real
-    protobuf wheel exists, so Python workers forked by the (not yet
-    started) JVM can import the TWS state-protocol modules. Driver-side
-    sys.path is handled too. See streaming/protoshim_install.py."""
-    try:
-        import google.protobuf  # noqa: F401
-
-        return
-    except ImportError:
-        pass
-    vendor = os.path.join(
-        os.path.dirname(os.path.abspath(__file__)), "vendor", "protoshim"
-    )
-    import sys
-
-    if vendor not in sys.path:
-        sys.path.insert(0, vendor)
-    current = os.environ.get("PYTHONPATH", "")
-    if vendor not in current.split(os.pathsep):
-        os.environ["PYTHONPATH"] = (
-            vendor + (os.pathsep + current if current else "")
-        )
+def default_driver_memory(physical_bytes: int) -> str:
+    """``spark.driver.memory`` for a box with ``physical_bytes`` of RAM:
+    a quarter of it, in whole megabytes, and never under 1g. Local mode
+    runs every task inside the driver JVM, so this is the engine's heap;
+    the quarter leaves room for the Python workers and the page cache."""
+    return f"{max(1024, physical_bytes // 4 // 2**20)}m"
 
 
 def get_spark(
@@ -53,20 +36,18 @@ def get_spark(
     core count (``$SPARK_SHUFFLE_PARTITIONS`` or ``shuffle_partitions``
     override it; Spark's default 200 is wrong for local and tiny data,
     and at real cluster scale callers raise it to ~2-3x total cores),
-    AQE + skew-join handling on, UTC session timezone so
+    AQE + skew-join handling on, a driver heap of a quarter of physical
+    RAM (``default_driver_memory``; ``$SPARK_DRIVER_MEMORY`` overrides
+    it), UTC session timezone so
     timestamp comparisons against the DuckDB oracle (UTC-naive) are
     stable, ANSI off for permissive multi-format parsing semantics
     (the reference's pandas `errors='coerce'` model; SURVEY.md §4.3).
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     master = master or f"local[{cpus}]"
-    # the transformWithStateInPandas state protocol needs a protobuf
-    # runtime in every Python process Spark spawns (incl. the pre-init
-    # driver worker, whose env snapshots the JVM's env at JVM LAUNCH —
-    # so this must run before getOrCreate builds the JVM). When the
-    # real wheel is absent, put the vendored mini-runtime
-    # (vendor/protoshim) on PYTHONPATH; no-op otherwise.
-    _ensure_worker_protobuf_path()
+    driver_memory = os.environ.get("SPARK_DRIVER_MEMORY") or default_driver_memory(
+        os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    )
     shuffle_partitions = shuffle_partitions or int(
         os.environ.get("SPARK_SHUFFLE_PARTITIONS", DEFAULT_SHUFFLE_PARTITIONS)
     )
@@ -85,7 +66,7 @@ def get_spark(
         # only as raw longs under this legacy flag (io.load_table and
         # streaming.read_events_stream convert back to timestamps)
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "48g"))
+        .config("spark.driver.memory", driver_memory)
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))

@@ -23,6 +23,10 @@ ints) said green. This version closes that gap three ways:
    6 dp is labeled `near_miss_at_6dp` so FP noise is visible, never
    silently passed.
 
+A lost Spark JVM (py4j connection gone) stops the run: the running
+query fails as ``jvm lost``, the rest are recorded as ``not_run``, and
+the exit status is nonzero.
+
 Usage:
   python scripts/verify_local.py [--sf DIR] [--lint-only] [query ...]
   python scripts/verify_local.py --json VERIFY_LOCAL_rN.json
@@ -101,6 +105,113 @@ def fetch_oracle_arrow(con, sql):
     return cols, rows
 
 
+def jvm_lost(spark, exc) -> bool:
+    """True when ``exc`` means the Spark JVM is gone: a py4j network
+    error anywhere in its chain, or a py4j error after which the gateway
+    no longer answers a trivial call."""
+    from py4j.protocol import Py4JError, Py4JNetworkError
+
+    chain, e = [], exc
+    while e is not None and e not in chain:
+        chain.append(e)
+        e = e.__cause__ or e.__context__
+    if any(isinstance(e, Py4JNetworkError) for e in chain):
+        return True
+    if not any(isinstance(e, Py4JError) for e in chain):
+        return False
+    try:
+        spark.sparkContext._jvm.java.lang.System.currentTimeMillis()
+    except Exception:
+        return True
+    return False
+
+
+def check_query(spark, con, name, query, oracle, sf):
+    """Run one query and compare it with its oracle (``None``: rows
+    only). Returns the report record; a Spark error propagates."""
+    from commercial_rfp_data_pipeline_spark.io import release_pinned
+
+    t0 = time.time()
+    release_pinned()  # each query re-pins its own build products
+    sdf = query(spark, sf)
+    scols = sdf.columns
+    srows = [tuple(r) for r in sdf.collect()]
+    if oracle is None:
+        print(f"ok   {name}: rows-only, {len(srows)} rows  [{time.time()-t0:.1f}s]")
+        return {"status": "rows_only", "spark_rows": len(srows)}
+    problems = []
+    near_miss = False
+    try:
+        offenders = lint_oracle_types(con, oracle)
+        if offenders:
+            problems.append(
+                "oracle output type lint: "
+                + ", ".join(f"{c}:{t}" for c, t in offenders)
+                + " (HUGEINT/DECIMAL do not survive driver materialization; "
+                "CAST to BIGINT/DOUBLE in the oracle SQL)"
+            )
+        ocols, orows = fetch_oracle_arrow(con, oracle)
+    except Exception:
+        print(f"FAIL {name}: oracle error\n{traceback.format_exc()}")
+        return {"status": "fail", "err": "oracle error"}
+    if sorted(scols) != sorted(ocols):
+        problems.append(f"columns spark={sorted(scols)} oracle={sorted(ocols)}")
+    if len(srows) != len(orows):
+        problems.append(f"rowcount spark={len(srows)} oracle={len(orows)}")
+    if not problems:
+        ms = to_multiset(scols, srows)
+        mo = to_multiset(ocols, orows)
+        if ms != mo:
+            # report-only tolerance: would 6-dp rounding have passed?
+            ms6 = to_multiset(scols, srows, exact_floats=False)
+            mo6 = to_multiset(ocols, orows, exact_floats=False)
+            near_miss = ms6 == mo6
+            only_s = [k for k in ms if ms[k] != mo.get(k, 0)][:3]
+            only_o = [k for k in mo if mo[k] != ms.get(k, 0)][:3]
+            problems.append(
+                f"values diff: {sum(abs(ms.get(k,0)-mo.get(k,0)) for k in set(ms)|set(mo))} cells"
+                + (" [NEAR-MISS: equal at 6dp — FP noise, still a FAIL]" if near_miss else "")
+                + f"\n  spark-only sample: {only_s}\n  oracle-only sample: {only_o}"
+            )
+    if problems:
+        print(f"FAIL {name}: " + "; ".join(problems) + f"  [{time.time()-t0:.1f}s]")
+        return {
+            "status": "fail",
+            "err": "; ".join(problems)[:500],
+            "near_miss_at_6dp": near_miss,
+        }
+    print(f"PASS {name}: {len(srows)} rows  [{time.time()-t0:.1f}s]")
+    return {"status": "pass", "rows": len(srows), "hash_match": True}
+
+
+def run_queries(spark, con, queries, oracles, names, sf):
+    """Check each named query in turn; returns ``{name: record}``.
+
+    A Spark error fails that query and the run goes on, unless the JVM
+    is gone: then every later query would fail the same way, so the run
+    stops, the running query fails with ``jvm lost`` and the rest are
+    recorded as ``not_run``."""
+    report = {}
+    for i, name in enumerate(names):
+        try:
+            report[name] = check_query(
+                spark, con, name, queries[name], oracles.get(name), sf
+            )
+        except Exception as exc:
+            if jvm_lost(spark, exc):
+                rest = names[i + 1:]
+                print(
+                    f"STOP {name}: the Spark JVM is gone ({exc!r:.200}); "
+                    f"{len(rest)} queries not run"
+                )
+                report[name] = {"status": "fail", "err": "jvm lost"}
+                report.update({n: {"status": "not_run"} for n in rest})
+                break
+            print(f"FAIL {name}: spark error\n{traceback.format_exc()}")
+            report[name] = {"status": "fail", "err": "spark error"}
+    return report
+
+
 def main():
     ap = argparse.ArgumentParser()
     ap.add_argument("--sf", default="/root/testdata/sf0.01")
@@ -119,7 +230,7 @@ def main():
     ap.add_argument("queries", nargs="*")
     args = ap.parse_args()
 
-    from commercial_rfp_data_pipeline_spark.io import TABLES, release_pinned
+    from commercial_rfp_data_pipeline_spark.io import TABLES
     from commercial_rfp_data_pipeline_spark.registry import all_oracles, all_queries
 
     con = duckdb.connect()
@@ -153,89 +264,21 @@ def main():
     from commercial_rfp_data_pipeline_spark.session import get_spark
 
     spark = get_spark()
-    failures = []
-    report = {}
-    for name in names:
-        t0 = time.time()
-        release_pinned()  # each query re-pins its own build products
-        try:
-            sdf = queries[name](spark, args.sf)
-            scols = sdf.columns
-            srows = [tuple(r) for r in sdf.collect()]
-        except Exception:
-            print(f"FAIL {name}: spark error\n{traceback.format_exc()}")
-            failures.append(name)
-            report[name] = {"status": "fail", "err": "spark error"}
-            continue
-        if name not in oracles:
-            print(f"ok   {name}: rows-only, {len(srows)} rows  [{time.time()-t0:.1f}s]")
-            report[name] = {"status": "rows_only", "spark_rows": len(srows)}
-            continue
-        problems = []
-        near_miss = False
-        try:
-            offenders = lint_oracle_types(con, oracles[name])
-            if offenders:
-                problems.append(
-                    "oracle output type lint: "
-                    + ", ".join(f"{c}:{t}" for c, t in offenders)
-                    + " (HUGEINT/DECIMAL do not survive driver materialization; "
-                    "CAST to BIGINT/DOUBLE in the oracle SQL)"
-                )
-            ocols, orows = fetch_oracle_arrow(con, oracles[name])
-        except Exception:
-            print(f"FAIL {name}: oracle error\n{traceback.format_exc()}")
-            failures.append(name)
-            report[name] = {"status": "fail", "err": "oracle error"}
-            continue
-        if sorted(scols) != sorted(ocols):
-            problems.append(f"columns spark={sorted(scols)} oracle={sorted(ocols)}")
-        if len(srows) != len(orows):
-            problems.append(f"rowcount spark={len(srows)} oracle={len(orows)}")
-        if not problems:
-            ms = to_multiset(scols, srows)
-            mo = to_multiset(ocols, orows)
-            if ms != mo:
-                # report-only tolerance: would 6-dp rounding have passed?
-                ms6 = to_multiset(scols, srows, exact_floats=False)
-                mo6 = to_multiset(ocols, orows, exact_floats=False)
-                near_miss = ms6 == mo6
-                only_s = [k for k in ms if ms[k] != mo.get(k, 0)][:3]
-                only_o = [k for k in mo if mo[k] != ms.get(k, 0)][:3]
-                problems.append(
-                    f"values diff: {sum(abs(ms.get(k,0)-mo.get(k,0)) for k in set(ms)|set(mo))} cells"
-                    + (" [NEAR-MISS: equal at 6dp — FP noise, still a FAIL]" if near_miss else "")
-                    + f"\n  spark-only sample: {only_s}\n  oracle-only sample: {only_o}"
-                )
-        if problems:
-            print(f"FAIL {name}: " + "; ".join(problems) + f"  [{time.time()-t0:.1f}s]")
-            failures.append(name)
-            report[name] = {
-                "status": "fail",
-                "err": "; ".join(problems)[:500],
-                "near_miss_at_6dp": near_miss,
-            }
-        else:
-            print(f"PASS {name}: {len(srows)} rows  [{time.time()-t0:.1f}s]")
-            report[name] = {
-                "status": "pass",
-                "rows": len(srows),
-                "hash_match": True,
-            }
-
-    print(f"\n{len(names)-len(failures)}/{len(names)} passed")
+    report = run_queries(spark, con, queries, oracles, names, args.sf)
+    failed = sum(1 for r in report.values() if r["status"] == "fail")
+    not_run = sum(1 for r in report.values() if r["status"] == "not_run")
+    print(f"\n{len(names)-failed-not_run}/{len(names)} passed")
     if args.json:
         import json
 
         with open(args.json, "w") as f:
             json.dump(
-                {"sf": args.sf, "passed": len(names) - len(failures),
-                 "total": len(names), "queries": report},
+                {"sf": args.sf, "passed": len(names) - failed - not_run,
+                 "total": len(names), "not_run": not_run, "queries": report},
                 f,
                 indent=1,
             )
-    return 1 if failures else 0
-
+    return 1 if failed or not_run else 0
 
 if __name__ == "__main__":
     sys.exit(main())

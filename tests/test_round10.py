@@ -64,68 +64,6 @@ def test_cc_local_fast_path_equals_distributed(spark, monkeypatch):
     assert sout2 == {("a", "a"), ("b", "b"), ("c", "c"), ("d", "d")}
 
 
-def test_protoshim_wire_format_hand_checked():
-    """The vendored mini-protobuf runtime (vendor/protoshim) must be
-    WIRE-EXACT: the JVM state server parses these bytes with the real
-    protobuf runtime. Golden bytes below are hand-derived from the
-    public encoding spec (tag = field<<3|wire, varints LEB128,
-    length-delimited strings/bytes/messages)."""
-    from commercial_rfp_data_pipeline_spark.streaming.protoshim_install import (
-        ensure_protobuf,
-    )
-
-    ensure_protobuf()
-    import pyspark.sql.streaming.proto.StateMessage_pb2 as sm
-
-    # nested oneof chain: StateRequest.statefulProcessorCall(2) ->
-    # StatefulProcessorCall.setHandleState(1) -> SetHandleState.state(1)=CREATED(1)
-    m = sm.StateRequest(
-        statefulProcessorCall=sm.StatefulProcessorCall(
-            setHandleState=sm.SetHandleState(state=sm.CREATED)
-        )
-    )
-    assert m.SerializeToString() == bytes.fromhex("12040a020801")
-
-    # attribute-chain write marks ancestors present (client pattern:
-    # state_call_command.ttl.durationMs = ...)
-    scc = sm.StateCallCommand()
-    scc.stateName = "s1"
-    scc.schema = "sch"
-    scc.ttl.durationMs = 1000
-    assert scc.SerializeToString() == bytes.fromhex(
-        "0a0273311203736368220308e807"
-    )
-
-    # reading an unset sub-message must NOT mark it present
-    scc2 = sm.StateCallCommand(stateName="x")
-    _ = scc2.ttl
-    assert scc2.SerializeToString() == bytes.fromhex("0a0178")
-
-    # round-trip: negative int32, bool, repeated message, proto3
-    # optional bytes explicitly set to the default value
-    src = sm.StateResponseWithMapIterator(
-        statusCode=-3,
-        errorMessage="e",
-        kvPair=[
-            sm.KeyAndValuePair(key=b"k1", value=b"v1"),
-            sm.KeyAndValuePair(key=b"k2", value=b"v2"),
-        ],
-        requireNextFetch=True,
-    )
-    back = sm.StateResponseWithMapIterator()
-    back.ParseFromString(src.SerializeToString())
-    assert back.statusCode == -3 and back.requireNextFetch is True
-    assert [(p.key, p.value) for p in back.kvPair] == [
-        (b"k1", b"v1"),
-        (b"k2", b"v2"),
-    ]
-    ti = sm.TimerInfo(key=b"", timestampMs=5)
-    t2 = sm.TimerInfo()
-    # unknown trailing field (number 15, varint) must be skipped
-    t2.ParseFromString(ti.SerializeToString() + bytes.fromhex("7805"))
-    assert t2.HasField("key") and t2.key == b"" and t2.timestampMs == 5
-
-
 def test_fuzzy_pairs_artifact_matches_inline(
     spark, sf_dir, tmp_path, monkeypatch
 ):

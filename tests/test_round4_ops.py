@@ -113,88 +113,6 @@ def test_pagerank_rejects_nothing_but_handles_empty_edges(spark):
     assert max(ranks) - min(ranks) < 1e-15
 
 
-def test_transform_with_state_matches_batch(spark, sf_dir):
-    """transformWithStateInPandas (Spark 4 typed-state API) on finite
-    replay == batch groupBy aggregates: per-(user, type) counts from
-    MapState, per-user totals from ValueState. Requires the RocksDB
-    state-store provider (a transformWithState constraint) AND a
-    protobuf runtime for the TWS state-server wire protocol — this
-    container ships no protobuf wheel, so round 10's vendored
-    mini-runtime (vendor/protoshim, installed by ensure_protobuf and
-    shipped to workers via addPyFile) supplies it. The processor logic
-    is additionally covered by test_tws_processor_logic_with_fake_state
-    below."""
-    import pytest
-
-    from commercial_rfp_data_pipeline_spark.streaming.protoshim_install import (
-        ensure_protobuf,
-    )
-
-    ensure_protobuf(spark)
-    from pyspark.sql import functions as F
-    from commercial_rfp_data_pipeline_spark.io import load_table
-    from commercial_rfp_data_pipeline_spark.streaming.stateful_v2 import (
-        user_type_running_stats,
-    )
-    from commercial_rfp_data_pipeline_spark.streaming.windows import (
-        read_events_stream,
-        run_to_completion,
-    )
-
-    key = "spark.sql.streaming.stateStore.providerClass"
-    prev = spark.conf.get(key, None)
-    spark.conf.set(
-        key,
-        "org.apache.spark.sql.execution.streaming.state."
-        "RocksDBStateStoreProvider",
-    )
-    try:
-        stream = read_events_stream(spark, sf_dir)
-        got_df = run_to_completion(
-            user_type_running_stats(stream), "t_tws", mode="update"
-        )
-        rows = got_df.collect()
-    finally:
-        if prev is None:
-            spark.conf.unset(key)
-        else:
-            spark.conf.set(key, prev)
-    # update mode emits once per key per batch — keep the final (max
-    # n_type) emission per (user, type) and final totals per user
-    got_types: dict = {}
-    got_totals: dict = {}
-    for r in rows:
-        k = (r.user_id, r.event_type)
-        if k not in got_types or r.n_type > got_types[k]:
-            got_types[k] = r.n_type
-        if (
-            r.user_id not in got_totals
-            or r.n_events > got_totals[r.user_id][0]
-        ):
-            got_totals[r.user_id] = (r.n_events, round(r.total_value, 6))
-    ev = load_table(spark, sf_dir, "events")
-    want_types = {
-        (r.user_id, r.event_type): r.n
-        for r in ev.groupBy("user_id", "event_type")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .collect()
-    }
-    want_totals = {
-        r.user_id: (r.n, float(r.total))
-        for r in ev.groupBy("user_id")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.round(F.sum("value"), 6).alias("total"),
-        )
-        .collect()
-    }
-    assert got_types == want_types
-    assert set(got_totals) == set(want_totals)
-    for uid, (wn, wt) in want_totals.items():
-        gn, gt = got_totals[uid]
-        assert gn == wn and gt == pytest.approx(wt, abs=1e-6), uid
-
-
 def test_jsonl_corpus_roundtrip_and_quarantine(spark, sf_dir, tmp_path):
     """JSONL source: schema-pinned PERMISSIVE read routes malformed
     lines to _corrupt_record; sharded gzip JSONL sink lays out
@@ -236,72 +154,6 @@ def test_jsonl_corpus_roundtrip_and_quarantine(spark, sf_dir, tmp_path):
     assert {tuple(r) for r in back.collect()} == {
         tuple(r) for r in good.collect()
     }
-
-
-def test_tws_processor_logic_with_fake_state():
-    """The TWS processor's accumulation semantics, exercised directly
-    against fake ValueState/MapState (the Spark wiring is env-gated on
-    protobuf above): totals accumulate across calls, per-type counts
-    merge into MapState, emissions carry the running values."""
-    import pandas as pd
-
-    from commercial_rfp_data_pipeline_spark.streaming.stateful_v2 import (
-        UserTypeStatsProcessor,
-    )
-
-    class FakeValueState:
-        def __init__(self):
-            self._v = None
-
-        def exists(self):
-            return self._v is not None
-
-        def get(self):
-            return self._v
-
-        def update(self, v):
-            self._v = v
-
-    class FakeMapState:
-        def __init__(self):
-            self._m = {}
-
-        def containsKey(self, k):
-            return k in self._m
-
-        def getValue(self, k):
-            return self._m[k]
-
-        def updateValue(self, k, v):
-            self._m[k] = v
-
-    class FakeHandle:
-        def __init__(self):
-            self.v = FakeValueState()
-            self.m = FakeMapState()
-
-        def getValueState(self, name, schema):
-            return self.v
-
-        def getMapState(self, name, ks, vs):
-            return self.m
-
-    p = UserTypeStatsProcessor()
-    h = FakeHandle()
-    p.init(h)
-    b1 = pd.DataFrame({"event_type": ["a", "a", "b"], "value": [1.0, 2.0, 3.0]})
-    out1 = pd.concat(list(p.handleInputRows((7,), iter([b1]), None)))
-    assert set(out1["event_type"]) == {"a", "b"}
-    assert out1.set_index("event_type").loc["a", "n_type"] == 2
-    assert (out1["n_events"] == 3).all()
-    assert (out1["total_value"] == 6.0).all()
-    # second micro-batch: state carries over
-    b2 = pd.DataFrame({"event_type": ["b"], "value": [4.0]})
-    out2 = pd.concat(list(p.handleInputRows((7,), iter([b2]), None)))
-    assert out2.iloc[0]["n_type"] == 2  # b: 1 + 1
-    assert out2.iloc[0]["n_events"] == 4
-    assert out2.iloc[0]["total_value"] == 10.0
-    assert h.v.get() == (4, 10.0)
 
 
 def test_char_entropy_known_values(spark):

@@ -223,9 +223,9 @@ def test_dsir_selection_is_limit_first(spark, sf_dir):
     """dsir_importance_resample must select via TakeOrderedAndProject
     (orderBy().limit() BEFORE the rank window — the registry's
     limit-first discipline) and plan no CartesianProduct."""
-    from commercial_rfp_data_pipeline_spark.queries.round9_q import (
-        q_dsir_importance_resample,
-    )
+    from commercial_rfp_data_pipeline_spark.registry import all_queries
+
+    q_dsir_importance_resample = all_queries()["dsir_importance_resample"]
 
     p = q_dsir_importance_resample(spark, sf_dir)._jdf.queryExecution().executedPlan().toString()
     assert "TakeOrderedAndProject" in p
@@ -236,9 +236,9 @@ def test_dsir_target_slice_dominates(spark, sf_dir):
     """Sanity the data curator checks: the DSIR top-100 should be
     dominated by target-language docs (en importance weights are
     positive by construction of the target LM)."""
-    from commercial_rfp_data_pipeline_spark.queries.round9_q import (
-        q_dsir_importance_resample,
-    )
+    from commercial_rfp_data_pipeline_spark.registry import all_queries
+
+    q_dsir_importance_resample = all_queries()["dsir_importance_resample"]
 
     rows = q_dsir_importance_resample(spark, sf_dir).collect()
     assert len(rows) == 100
